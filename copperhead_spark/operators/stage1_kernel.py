@@ -1,39 +1,31 @@
 """Arrow-vectorized stage-1 jagged front half (guide §4.2).
 
-The array-native stage1 (pipeline.stage1_arrays) runs its per-object
-work — muon selection + FSR dereference, the two-muon opposite-sign
-event cut, pt ordering, jet selection + dR cleaning, top-2 extraction —
-as Catalyst array higher-order functions.  HOF lambdas are interpreted
-per element (no whole-stage codegen inside ``transform``/``filter``/
-``exists``), and the r12/r13 stage decomposition measured that
-interpretation at ~60% of the pipeline's quiet-window CPU.  This module
-is the same computation as ONE ``mapInArrow`` pass: list offsets +
-flattened struct children come in as contiguous Arrow buffers, every
-step above is a handful of NumPy vector ops over them, and only the
-flat per-event columns come back.
+pipeline.stage1_arrays runs its per-object work — muon selection + FSR
+dereference, the two-muon opposite-sign event cut, pt ordering, jet
+selection + dR cleaning, top-2 extraction — as ONE ``mapInArrow``
+pass: list offsets + flattened struct children come in as contiguous
+Arrow buffers, every step above is a handful of NumPy vector ops over
+them, and only the flat per-event columns come back.
 
-Bit-exactness (the reason this swap is legal against the unchanged
-DuckDB oracles): the jagged front half contains NO transcendentals —
-only IEEE-754 +,-,*,  comparisons, ``floor`` and integer counting, which
-NumPy and the JVM evaluate identically double-for-double.  All trig
-(COS/SIN/EXP/LN in the pair kinematics) stays in the codegen'd JVM tail
-(pipeline._derive_and_label), untouched.  Equality with the HOF plan is
-asserted exactly in tests (tests/test_pipeline.py, test_round13.py) and
-by the oracle rows of every e2e consumer.
+Bit-exactness (the reason the DuckDB oracles can compare exactly): the
+jagged front half contains NO transcendentals — only IEEE-754 +,-,*,
+comparisons, ``floor`` and integer counting, which NumPy and the JVM /
+DuckDB evaluate identically double-for-double.  All trig (COS/SIN/EXP/
+LN in the pair kinematics) stays in the codegen'd JVM tail
+(pipeline._derive_and_label).  Equality with the DuckDB oracle's
+front half is asserted exactly in tests/test_pipeline.py and by the
+oracle rows of every e2e consumer.
 
-Scale shape: identical to the HOF plan — a pure map over the event
-stream (zero shuffles), one JVM->Python->JVM Arrow crossing per task.
-Only the consumed columns cross (explicit select below), batches are
-columnar both ways, and the per-batch kernel is allocation-light.  The
-HOF plan remains available (pipeline.stage1_arrays(kernel=False)) as
-the no-Python-boundary variant; COPPERHEAD_STAGE1=hof flips the default
-back without code changes.
+Scale shape: a pure map over the event stream (zero shuffles), one
+JVM->Python->JVM Arrow crossing per task.  Only the consumed columns
+cross (explicit select below), batches are columnar both ways, and the
+per-batch kernel is allocation-light.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401  (callers' convention)
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TWO_PI = 6.283185307179586
@@ -250,14 +242,14 @@ _JET_IN = ("pt", "eta", "phi", "mass", "qgl", "jetId")
 
 def stage1_flat_arrow(ev: DataFrame) -> DataFrame:
     """events (post HLT/flag filter) -> flat per-event table, one
-    mapInArrow pass; bit-identical to the HOF front half.
+    mapInArrow pass.
 
     The Python boundary ships PRIMITIVE arrays (``Muon.pt`` etc. —
     ``GetArrayStructFields`` is whole-stage-codegen'd JVM-side), not the
     array<struct> columns: list<double> crosses Arrow near-zero-copy,
     while array-of-struct pays a per-element assembly on the JVM side
-    (measured: the struct form cost MORE CPU than the interpreted HOFs
-    it replaced; the primitive form is what made the kernel a win)."""
+    (measured: the struct form cost MORE CPU than an interpreted
+    array-HOF plan; the primitive form is what made the kernel a win)."""
     src = ev.select(
         *_BASE,
         *[F.col(f"Muon.{f}").alias(f"mu_{f}") for f in _MU_IN],

@@ -18,6 +18,23 @@ import pandas as pd
 from copperhead_spark.catalog import TABLES
 
 
+# Queries allowed to plan a BroadcastNestedLoopJoin (all-pairs) on
+# purpose, mapped to the registered query that is each one's scale path
+# (SURVEY §7 / COVERAGE SIM1-2, D5).  tests/test_plan_audit.py enforces
+# it and tools/plan_audit.py labels PLANS.md rows from it.
+BNLJ_BASELINES = {
+    # exact all-pairs cosine top-k; the scale path is LSH-bucketed
+    "sim_cosine_topk": "sim_lsh_buckets",
+    # the quantized sweep is deliberately all-pairs: it IS the cheap
+    # shortlist generator; cluster pruning comes from sim_ivf_topk
+    "sim_quantized_topk": "sim_ivf_topk",
+    # truncation-quality audit: exact prefix-vs-full ranking over the
+    # 5-query probe sample is all-pairs by design; the deployed prefix
+    # ranking runs inside probed IVF cells
+    "emb_matryoshka_topk": "sim_ivf_topk",
+}
+
+
 def make_duckdb(sf_dir: str):
     """A DuckDB connection with the testdata tables registered as views
     (the driver pre-registers the same names)."""

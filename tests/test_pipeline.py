@@ -13,7 +13,7 @@ import pandas as pd
 import pytest
 
 from copperhead_spark.fixtures import events_fixture, generate_events
-from copperhead_spark.pipeline import stage1, stage2, stage3
+from copperhead_spark.pipeline import stage1_arrays, stage2, stage3
 
 N_EVENTS = 1500
 SEED = 7
@@ -47,7 +47,7 @@ def pair_kin(o1, o2, m1, m2):
 
 
 def reference_stage1(rows):
-    """Pandas/numpy mirror of stage1 written from the spec."""
+    """Pandas/numpy mirror of stage1_arrays written from the spec."""
     out = []
     for (run, event, genw, hlt, flag, met, pu, muons, jets, fsr) in rows:
         if not (hlt and flag):
@@ -117,7 +117,7 @@ def reference_stage1(rows):
 def flat_and_ref(spark):
     rows = generate_events(N_EVENTS, SEED)
     events = events_fixture(spark, N_EVENTS, SEED)
-    flat = stage1(events)
+    flat = stage1_arrays(events)
     ref = reference_stage1(rows)
     got = (
         flat.select(
@@ -209,48 +209,65 @@ def test_stage1_partitioned_sink_roundtrip(flat_and_ref, spark, tmp_path):
 
 
 def test_stage1_arrays_identical_to_stage1(spark):
-    """The zero-shuffle array-native stage1 must be bit-identical to the
-    exploded-child implementation (same fixture, same columns, exact
-    float equality — both run the same IEEE expressions)."""
-    from copperhead_spark.pipeline import stage1_arrays
+    """stage1_arrays must be identical to the stage-1 DuckDB oracle
+    (plans/hmm_oracle.py), an independent relational execution
+    over the same hash-generated fixture (LATERAL explode, ROW_NUMBER
+    top-2, NOT EXISTS dR cleaning).  The front-half columns contain no
+    transcendentals, so the contract is exact equality: same events,
+    same regions, bit-equal doubles, and NULL (never NaN or 0) where a
+    jet is absent.  This fixture's survivors all carry 2-4 clean jets;
+    absent jets are pinned by test_round13's null-jets fixture."""
+    import duckdb
 
-    ev = events_fixture(spark, N_EVENTS, SEED)
-    a = stage1(ev).toPandas().sort_values("event").reset_index(drop=True)
-    b = stage1_arrays(ev).toPandas().sort_values("event").reset_index(drop=True)
-    assert len(a) > 0
-    pd.testing.assert_frame_equal(a, b[a.columns])
+    from copperhead_spark.fixtures import events_fixture_distributed
+    from copperhead_spark.plans.hmm_oracle import hmm_stage_ctes
+
+    n = 20000
+    cols = [
+        "mu1_pt", "mu1_eta", "mu1_phi", "mu2_pt", "mu2_eta", "mu2_phi",
+        "njets",
+        "jet1_pt", "jet1_eta", "jet1_phi", "jet1_mass",
+        "jet2_pt", "jet2_eta", "jet2_phi", "jet2_mass",
+    ]
+    got = [
+        tuple(r)
+        for r in stage1_arrays(events_fixture_distributed(spark, n))
+        .select("event", "region", *cols)
+        .orderBy("event")
+        .collect()
+    ]
+    ref = duckdb.connect().execute(
+        f"WITH {hmm_stage_ctes(n)} "
+        f"SELECT f.id, s.region, {', '.join('f.' + c for c in cols)} "
+        "FROM flat f JOIN sel s USING (id) ORDER BY f.id"
+    ).fetchall()
+    assert len(got) > 100, len(got)
+    assert [r[:2] for r in got] == [r[:2] for r in ref]
+    for i, c in enumerate(cols, start=2):
+        bad = [(g[0], g[i], r[i]) for g, r in zip(got, ref) if g[i] != r[i]]
+        assert not bad, (c, bad[:5])
 
 
 def test_stage1_arrays_plan_shape(spark):
-    """Scale invariants of both stage-1 plans: no Exchange before the
-    stage-2 histogram (the single shuffle); the HOF arm must not
-    duplicate array_sort via projection collapse (the _once Generate
-    barrier); the Arrow-kernel arm (r13 default) must be exactly ONE
-    Python crossing."""
-    from copperhead_spark.pipeline import stage1_arrays, stage2_variations
+    """Scale invariants of the stage-1 plan: no Exchange before the
+    stage-2 histogram (the single shuffle) and exactly ONE Python
+    crossing (the Arrow kernel), with no array HOF sorting left."""
+    from copperhead_spark.pipeline import stage2_variations
 
     ev = events_fixture(spark, 200, SEED)
     plan = (
-        stage2_variations(stage1_arrays(ev, kernel=False))
+        stage2_variations(stage1_arrays(ev))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1, plan.count("Exchange")
-    assert plan.count("array_sort") == 2, plan.count("array_sort")
-
-    kplan = (
-        stage2_variations(stage1_arrays(ev, kernel=True))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert kplan.count("Exchange") == 1, kplan.count("Exchange")
-    assert kplan.count("MapInArrow") == 1, kplan.count("MapInArrow")
-    assert "array_sort" not in kplan
+    assert plan.count("MapInArrow") == 1, plan.count("MapInArrow")
+    assert "array_sort" not in plan
 
 
 def test_distributed_fixture_feeds_pipeline(spark):
     """The executor-side generator (no driver loop) must populate every
     region with the same schema as the python fixture."""
     from copperhead_spark.fixtures import EVENT_SCHEMA, events_fixture_distributed
-    from copperhead_spark.pipeline import stage1_arrays
 
     ev = events_fixture_distributed(spark, 20000)
     assert [f.name for f in ev.schema.fields] == [f.name for f in EVENT_SCHEMA.fields]

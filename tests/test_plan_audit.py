@@ -20,20 +20,7 @@ import re
 import pytest
 
 from copperhead_spark.plans.registry import all_queries
-
-# intentionally all-pairs baselines: each one's scale path is a separate
-# registered query (LSH-bucketed), per SURVEY §7 / COVERAGE SIM1-2, D5
-BNLJ_BASELINES = {
-    "sim_cosine_topk": "sim_lsh_buckets",
-    # the quantized sweep is deliberately all-pairs: it IS the cheap
-    # shortlist generator; cluster pruning comes from sim_ivf_topk
-    "sim_quantized_topk": "sim_ivf_topk",
-    # truncation-quality audit: exact prefix-vs-full ranking over the
-    # 5-query probe sample is all-pairs by design; the deployed prefix
-    # ranking runs inside probed IVF cells
-    "emb_matryoshka_topk": "sim_ivf_topk",
-}
-
+from copperhead_spark.testing import BNLJ_BASELINES
 
 # queries whose FINAL (post-AQE) plan is inspected; they are executed so
 # AdaptiveSparkPlan is finalized and WholeStageCodegen spans materialize
@@ -204,10 +191,10 @@ def test_no_codegen_compile_fallback_in_heavy_expression_queries(spark, sf_dir):
         "ml_gbdt_inference",       # 2 folds x 8 unrolled depth-3 trees
         "ml_calibration_bins",     # margin twice + sigmoid in one project
         "pipeline_pretrain_corpus_e2e",  # six fused stages, widest plan
-        # the ACTUAL r7 offender: stage1 HOFs + derive kinematics fused
-        # past janino's 64 KB method limit — ran interpreted until the
+        # the r7 offender: stage 1 + derive kinematics fused past
+        # janino's 64 KB method limit and ran interpreted until the
         # codegen_barrier in pipeline._derive_and_label (r8) split the
-        # span (2.8x faster at 10M events once actually compiled)
+        # span; this entry guards that barrier
         "pipeline_hmm_histogram",
     ]
     qs = all_queries()

@@ -70,25 +70,31 @@ def test_no_reevaluated_expensive_subtrees(spark, name, max_py, max_scans):
 
 
 def test_stage1_arrow_kernel_bit_exact(spark):
-    """r13 session-2: the Arrow/NumPy stage-1 front half must be
-    BIT-exact vs the HOF plan (same rows, same doubles, same schema) —
-    it feeds oracle-hashed e2e queries.  The front half is
-    transcendental-free, so exact equality is the contract, not a
-    tolerance."""
+    """The Arrow/NumPy stage-1 front half must be BIT-exact whatever the
+    Arrow batch boundaries (same rows, same doubles, same schema) -- it
+    feeds oracle-hashed e2e queries, and a list-offset slip at a batch
+    edge would move muons/jets between events.  Default batching is
+    compared with 97-row batches (prime, so edges land mid-partition).
+    Equality with the independent DuckDB oracle is
+    test_pipeline.py::test_stage1_arrays_identical_to_stage1."""
     import numpy as np
 
     from copperhead_spark.fixtures import events_fixture_distributed
     from copperhead_spark.pipeline import stage1_arrays
 
     ev = events_fixture_distributed(spark, 20000)
-    a = stage1_arrays(ev, kernel=False).toPandas().sort_values(
-        "event").reset_index(drop=True)
-    b = stage1_arrays(ev, kernel=True).toPandas().sort_values(
-        "event").reset_index(drop=True)
-    sa = stage1_arrays(ev, kernel=False).schema
-    sb = stage1_arrays(ev, kernel=True).schema
-    assert [(f.name, f.dataType) for f in sa] == [
-        (f.name, f.dataType) for f in sb]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    a_df = stage1_arrays(ev)
+    a = a_df.toPandas().sort_values("event").reset_index(drop=True)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "97")
+    try:
+        b_df = stage1_arrays(ev)
+        b = b_df.toPandas().sort_values("event").reset_index(drop=True)
+    finally:
+        spark.conf.set(key, old)
+    assert [(f.name, f.dataType) for f in a_df.schema] == [
+        (f.name, f.dataType) for f in b_df.schema]
     assert len(a) == len(b) > 100
     for col in a.columns:
         x, y = a[col].to_numpy(), b[col].to_numpy()
@@ -103,8 +109,7 @@ def test_stage1_arrow_kernel_null_jets(spark):
     """jet1_*/jet2_* must be NULL (not NaN, not 0) when njets < 1/2 —
     Spark treats NaN > x as TRUE, so a NaN leak would flip the vbf
     channel cascade.  The F1 fixture's survivors always carry >= 2 clean
-    jets, so this uses a hand-built 0/1/2-jet fixture (and checks the
-    HOF arm agrees)."""
+    jets, so this uses a hand-built 0/1/2-jet fixture."""
     from copperhead_spark.fixtures import EVENT_SCHEMA
     from copperhead_spark.pipeline import stage1_arrays
 
@@ -118,15 +123,13 @@ def test_stage1_arrow_kernel_null_jets(spark):
         (1, 102, 1.0, True, True, 30.0, 20.0, mu, [jet, jet2], []),
     ]
     ev = spark.createDataFrame(rows, schema=EVENT_SCHEMA)
-    for k in (True, False):
-        flat = (stage1_arrays(ev, kernel=k).toPandas()
-                .sort_values("event").reset_index(drop=True))
-        assert list(flat.njets) == [0, 1, 2], k
-        assert flat.loc[0, ["jet1_pt", "jet2_pt", "jet1_qgl"]].isna().all(), k
-        assert flat.loc[1, "jet1_pt"] == 120.0 and flat.loc[
-            1, ["jet2_pt", "jet2_mass"]].isna().all(), k
-        assert flat.loc[2, "jet1_pt"] == 120.0 \
-            and flat.loc[2, "jet2_pt"] == 80.0, k
+    flat = (stage1_arrays(ev).toPandas()
+            .sort_values("event").reset_index(drop=True))
+    assert list(flat.njets) == [0, 1, 2]
+    assert flat.loc[0, ["jet1_pt", "jet2_pt", "jet1_qgl"]].isna().all()
+    assert flat.loc[1, "jet1_pt"] == 120.0 and flat.loc[
+        1, ["jet2_pt", "jet2_mass"]].isna().all()
+    assert flat.loc[2, "jet1_pt"] == 120.0 and flat.loc[2, "jet2_pt"] == 80.0
 
 
 def test_lsh_pairs_values_unchanged(spark):

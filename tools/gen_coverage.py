@@ -48,10 +48,10 @@ INVENTORY: list[tuple[str, str, list[str], str]] = [
     ("P11", "Dataset relabel split", ["p11_dataset_relabel_split"], ""),
     ("P12", "Overlap removal", ["p12_overlap_removal"], ""),
     # 2.3 joins
-    ("J1", "Index equi-join (cross-reference)", ["j1_star_join_revenue"], "operators/jagged.py xref_join (FSR recovery in pipeline)"),
-    ("J2", "dR cleaning anti-join", ["j2_anti_join", "phys_delta_r"], "operators/jagged.py dr_clean_anti_join (tested vs pandas mirror)"),
+    ("J1", "Index equi-join (cross-reference)", ["j1_star_join_revenue"], "FSR recovery in pipeline.stage1_arrays is an index dereference in operators/stage1_kernel.py"),
+    ("J2", "dR cleaning anti-join", ["j2_anti_join", "phys_delta_r"], "jet-vs-muon dR cleaning in operators/stage1_kernel.py (pipeline stage1; tested vs DuckDB oracle and pandas mirror)"),
     ("J3", "Intra-event cartesian + quantified predicate", ["j3_forall_quantified", "arr_forall_exists"], ""),
-    ("J4", "Dimuon pairing (top-2 pivot)", ["j4_top2_pivot"], "operators/jagged.py top2_pivot (pipeline stage1)"),
+    ("J4", "Dimuon pairing (top-2 pivot)", ["j4_top2_pivot"], "pt-ordered top-2 in operators/stage1_kernel.py (pipeline stage1)"),
     ("J5", "Broadcast scalar-map join", ["j5_broadcast_dim_join", "s6_metadata_prescan"], ""),
     ("J6", "1-D binned lookup join", ["j6_binned_lookup_1d"], "operators/lookup.py bucket equi-join rewrite"),
     ("J7", "2-D binned lookup join", ["j7_binned_lookup_2d"], ""),
@@ -98,7 +98,7 @@ INVENTORY: list[tuple[str, str, list[str], str]] = [
     ("M4", "Deterministic random (hash uniforms)", ["rand_hash_uniform"], "operators/rochester.py (overflow-hardened, property-tested)"),
     ("M5", "String functions (labels, concat)", ["p11_dataset_relabel_split", "text_token_stats"], ""),
     ("M6", "Date/time functions", ["t1_time_bucket_agg", "t2_date_parts", "t3_session_gaps"], "extension beyond reference"),
-    ("M7", "Array HOFs (size/slice/element_at/forall/transform/aggregate)", ["arr_slice_stats", "arr_forall_exists", "arr_posexplode"], "operators/jagged.py"),
+    ("M7", "Array HOFs (size/slice/element_at/forall/transform/aggregate)", ["arr_slice_stats", "arr_forall_exists", "arr_posexplode"], "plans/arrays.py"),
     # 2.9 streaming (extension)
     ("ST1", "Tumbling window + watermark", ["stream_tumbling_window"], ""),
     ("ST2", "Sliding window", ["stream_sliding_window"], ""),
@@ -210,7 +210,7 @@ INVENTORY: list[tuple[str, str, list[str], str]] = [
     ("UDAF1", "Grouped-agg pandas UDF (Python UDAF)", ["udaf_grouped_median"],
      "exact lower-median order statistic; bounded group sizes required — a8_quantiles is the giant-group path"),
     # pipeline parity
-    ("E2E", "stage1->2->3 pipeline on jagged events", ["pipeline_hmm_histogram", "pipeline_root_to_th1_e2e"], "pipeline.py stage1 (exploded) + stage1_arrays (zero-shuffle array-native, bit-identical, benched at 1M events in bench.py) + distributed executor-side fixture; vs independent pandas mirror, tests/test_pipeline.py.  pipeline_root_to_th1_e2e composes the FULL reference chain in one oracle: ROOT jagged scan -> stage1/2 -> weighted histogram -> TH1F templates read back from ROOT bytes"),
+    ("E2E", "stage1->2->3 pipeline on jagged events", ["pipeline_hmm_histogram", "pipeline_root_to_th1_e2e"], "pipeline.py stage1_arrays (zero-shuffle: one Arrow/NumPy kernel front half + codegen'd JVM tail; benched in bench.py and perfbench hmm_root) + distributed executor-side fixture; vs the DuckDB oracle (front half bit-exact) and an independent pandas mirror, tests/test_pipeline.py.  pipeline_root_to_th1_e2e composes the FULL reference chain in one oracle: ROOT jagged scan -> stage1/2 -> weighted histogram -> TH1F templates read back from ROOT bytes"),
     # relational / analytics extensions
     ("R1", "CUBE / GROUPING SETS rollup", ["a5_cube_grouping_sets"], "one shuffle, grouping-id disambiguated"),
     ("R2", "PIVOT / UNPIVOT reshape", ["pivot_status_by_flag", "unpivot_variations"], ""),

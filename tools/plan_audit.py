@@ -17,11 +17,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from copperhead_spark.plans.registry import all_queries
 from copperhead_spark.session import get_spark
+from copperhead_spark.testing import BNLJ_BASELINES
 
 SF_DIR = os.environ.get("COPPERHEAD_TEST_SF", "/root/testdata/sf0.001")
-
-# keep in sync with tests/test_plan_audit.py
-BNLJ_BASELINES = {"sim_cosine_topk", "sim_quantized_topk"}
 
 HEADLINE = [
     "flagship_selection_yield",
